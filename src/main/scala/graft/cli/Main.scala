@@ -648,10 +648,10 @@ object Main {
         Stats.topPrefixes(c.perPrefix, metric, o.n), s"Top ${o.n} by $metric"))
     }
     println(Reports.markdown(
-      withName(c.perUser.orderBy(desc("bytes")).limit(o.n), "uid", idMaps.userById),
+      withName(Stats.topIds(c.perUser, "uid", "bytes", o.n), "uid", idMaps.userById),
       "Usage by user"))
     println(Reports.markdown(
-      withName(c.perGroup.orderBy(desc("bytes")).limit(o.n), "gid", idMaps.groupById),
+      withName(Stats.topIds(c.perGroup, "gid", "bytes", o.n), "gid", idMaps.groupById),
       "Usage by group"))
     spark.stop()
   }
@@ -695,10 +695,10 @@ object Main {
         Stats.topPrefixes(c.perPrefix, metric, o.n), s"Top ${o.n} by $metric"))
     }
     println(Reports.markdown(
-      withName(c.perUser.orderBy(desc("bytes")).limit(o.n), "uid", idMaps.userById),
+      withName(Stats.topIds(c.perUser, "uid", "bytes", o.n), "uid", idMaps.userById),
       "Usage by user"))
     println(Reports.markdown(
-      withName(c.perGroup.orderBy(desc("bytes")).limit(o.n), "gid", idMaps.groupById),
+      withName(Stats.topIds(c.perGroup, "gid", "bytes", o.n), "gid", idMaps.groupById),
       "Usage by group"))
     spark.stop()
   }
@@ -738,20 +738,22 @@ object Main {
   private[cli] def writeReportTree(c: Stats.Computed,
       dir: java.nio.file.Path, n: Int, ids: IdMaps): Unit = {
     java.nio.file.Files.createDirectories(dir)
+    // each table is collected once; the three renderers read the rows
     def emit(base: String, df: DataFrame, title: String): Unit = {
-      java.nio.file.Files.writeString(dir.resolve(s"$base.tsv"), Reports.tsv(df))
-      java.nio.file.Files.writeString(dir.resolve(s"$base.json"), Reports.jsonLines(df))
-      java.nio.file.Files.writeString(dir.resolve(s"$base.md"), Reports.markdown(df, title))
+      val local = df.sparkSession.createDataFrame(df.collect().toList.asJava, df.schema)
+      java.nio.file.Files.writeString(dir.resolve(s"$base.tsv"), Reports.tsv(local))
+      java.nio.file.Files.writeString(dir.resolve(s"$base.json"), Reports.jsonLines(local))
+      java.nio.file.Files.writeString(dir.resolve(s"$base.md"), Reports.markdown(local, title))
     }
     emit("totals", c.totals, "Totals")
     Stats.rankedMetrics.foreach { m =>
       emit(s"top_$m", Stats.topPrefixes(c.perPrefix, m, n), s"Top $n by $m")
     }
     emit("by_user",
-      withName(c.perUser.orderBy(desc("bytes")).limit(n), "uid", ids.userById),
+      withName(Stats.topIds(c.perUser, "uid", "bytes", n), "uid", ids.userById),
       "Usage by user")
     emit("by_group",
-      withName(c.perGroup.orderBy(desc("bytes")).limit(n), "gid", ids.groupById),
+      withName(Stats.topIds(c.perGroup, "gid", "bytes", n), "gid", ids.groupById),
       "Usage by group")
     // Per-id markdown mirrors the reference's multi-section templates
     // (markdown.go:32-371): a totals table with human-formatted sizes,
@@ -765,25 +767,21 @@ object Main {
     }
     def perIdTree(subdir: String, perId: DataFrame, perIdPrefix: DataFrame,
         idCol: String, nameOf: Long => String): Seq[(Long, String)] = {
-      val top = perId.orderBy(desc("bytes")).limit(n)
-        .select(col(idCol)).collect().map(_.getLong(0)).toSeq
-      if (top.isEmpty) return Nil
-      val totalsById = perId.where(col(idCol).isin(top: _*))
-        .collect().map(r => r.getLong(r.fieldIndex(idCol)) -> r).toMap
+      val topRows = Stats.topIds(perId, idCol, "bytes", n).collect().toSeq
+      if (topRows.isEmpty) return Nil
+      val top = topRows.map(r => r.getLong(r.fieldIndex(idCol)))
       val prefixRows = perIdPrefix.where(col(idCol).isin(top: _*))
         .collect().groupBy(r => r.getLong(r.fieldIndex(idCol)))
       val cols = perId.columns
       val metrics = Stats.rankedMetrics.filter(perIdPrefix.columns.contains)
-      top.foreach { id =>
+      top.zip(topRows).foreach { case (id, totals) =>
         val idName = nameOf(id)
         val sb = new StringBuilder(s"# Usage report for $idName ($idCol $id)\n\n")
         sb.append("## Contents\n\n* [Totals](#totals)\n")
         metrics.foreach(m => sb.append(s"* [Top $n prefixes by $m](#top-$m)\n"))
         sb.append("\n## <a id=totals></a> Totals\n\n| Metric | Value |\n| :--- | ---: |\n")
-        totalsById.get(id).foreach { r =>
-          cols.filterNot(_ == idCol).foreach { cn =>
-            sb.append(s"| $cn | ${human(cn, r.get(r.fieldIndex(cn)))} |\n")
-          }
+        cols.filterNot(_ == idCol).foreach { cn =>
+          sb.append(s"| $cn | ${human(cn, totals.get(totals.fieldIndex(cn)))} |\n")
         }
         val mine = prefixRows.getOrElse(id, Array.empty)
         metrics.foreach { m =>

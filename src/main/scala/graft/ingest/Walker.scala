@@ -145,17 +145,13 @@ object Walker {
     * shuffle keyed by the seed-ancestor path. At the design point
     * (~10⁷ dirs) nothing proportional to the tree moves through the
     * driver or a broadcast — the per-seed-slice plan the round-1
-    * review called for.
-    *
-    * `prev` remains for tests / small trees where an in-memory map is
-    * handy; `prevDirs` supersedes it when set. */
+    * review called for. */
   def walk(
       spark: SparkSession,
       root: String,
       exclusions: Seq[String] = Nil,
       seedDepth: Int = 2,
       parallelism: Int = 0,
-      prev: PrevDirs = PrevDirs.empty,
       prevDirs: Option[org.apache.spark.sql.DataFrame] = None,
       progress: Option[ProgressHooks] = None): Result = {
     import org.apache.spark.sql.functions.{array_join, col, collect_list, regexp_replace, size => asize, slice => aslice, split, struct}
@@ -174,7 +170,7 @@ object Walker {
         val comps = split(regexp_replace(col("path"), "^/", ""), "/")
         PrevDirs.fromRows(df.where(asize(comps) <= seedComponents)
           .as[DirMeta].collect().toSeq)
-      case None => prev
+      case None => PrevDirs.empty
     }
 
     // Driver-side seeding: levels [0, seedDepth) are walked here; dirs
@@ -211,7 +207,7 @@ object Walker {
             }
           }
       case None =>
-        walkSeeds(spark, seeds, exPatterns, nParts, prev, progress)
+        walkSeeds(spark, seeds, exPatterns, nParts, progress)
     }
     Result(walked.union(spark.createDataset(driverRecords)))
   }
@@ -240,15 +236,14 @@ object Walker {
   /** Distributed walk of an explicit seed list (no prev-snapshot
     * slices). The unit [[ResumableWalk]] batches over. */
   private[ingest] def walkSeeds(spark: SparkSession, seeds: Seq[String],
-      exclusions: Seq[String], nParts: Int, prev: PrevDirs = PrevDirs.empty,
+      exclusions: Seq[String], nParts: Int,
       progress: Option[ProgressHooks] = None): Dataset[Record] = {
     import spark.implicits._
-    val bcPrev = spark.sparkContext.broadcast(prev)
     spark.createDataset(seeds)
       .repartition(math.max(1, nParts))
       .mapPartitions { it =>
         val ex = exclusions.map(_.r)
-        it.flatMap(dir => walkSubtree(Paths.get(dir), ex, bcPrev.value, progress))
+        it.flatMap(dir => walkSubtree(Paths.get(dir), ex, PrevDirs.empty, progress))
       }
   }
 

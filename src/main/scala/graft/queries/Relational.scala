@@ -290,9 +290,9 @@ object Relational {
     // SURVEY.md §2.8, reference analyze.go:226-243 at the stats
     // layer): a deterministic two-level walk is derived from orders
     // (/d<ck%10>/s<ok%4>/f<ok>, file size = floor(totalprice*100),
-    // dir rows carry n_entries), the pre-1997 snapshot's six frames
-    // are computed in full, and the full-corpus snapshot is merged in
-    // via changed-prefix discovery + ±1-signed delta aggregates —
+    // dir rows carry n_entries), the pre-1997 snapshot's stats cube
+    // is computed in full, and the full-corpus snapshot is merged in
+    // via changed-prefix discovery + a ±1-signed delta aggregate —
     // unchanged prefixes are never re-aggregated. The oracle
     // recomputes per-prefix stats FROM SCRATCH over all orders, so a
     // green row proves delta merge ≡ full recompute on an
@@ -339,7 +339,7 @@ object Relational {
           .withColumn("mode", lit(493))
           .withColumn("mod_time",
             lit("2020-01-01 00:00:00").cast("timestamp"))
-          // many consumers: 6 prev-state aggregates + changed-prefix
+          // many consumers: the prev-state cube + changed-prefix
           // discovery + the restricted contrib scans
           .localCheckpoint(true)
       }

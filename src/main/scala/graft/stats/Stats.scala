@@ -26,27 +26,46 @@ import org.apache.spark.sql.expressions.Window
   *
   * Scale: one semi-join of entries against matched prefixes (broadcast
   * when the matched-prefix set is small, shuffle otherwise — left to
-  * AQE), then partial+final hash aggregations. No collect, no driver
+  * AQE), then ONE partial+final hash aggregation onto the
+  * `(prefix, uid, gid)` cube ([[Computed]]); totals, per-id and
+  * per-prefix frames are rollups of the cube. No collect, no driver
   * state; top-N compiles to TakeOrderedAndProject.
   */
 object Stats {
 
-  final case class Computed(
-      /** single row: global totals (reference Totals struct, totals.go:17-27) */
-      totals: DataFrame,
-      /** one row per uid */
-      perUser: DataFrame,
-      /** one row per gid */
-      perGroup: DataFrame,
-      /** one row per prefix (input to rankings; reference computes these
-        * per-prefix folds as heap inputs, report_stats.go:231-245) */
-      perPrefix: DataFrame,
-      /** one row per (uid, prefix) — feeds the per-user report file
-        * trees (reference PerIDStats, report_stats.go:34-39, consumed
-        * by writeReportFiles, reports.go:128-229) */
-      perUserPrefix: DataFrame,
-      /** one row per (gid, prefix) */
-      perGroupPrefix: DataFrame)
+  /** One expression's stats state: the CUBE — the seven metrics
+    * (`prefixes` … `storage_bytes`) summed per `(prefix, uid, gid)`,
+    * one row per key with at least one contribution row. Every other
+    * stats frame is a rollup of the cube, defined here once; each
+    * keeps the key columns first, then the seven metrics. Like the
+    * reference's single `AllStats` value (stats.go:31-82), the cube is
+    * what [[StatsArtifact]] persists and what [[computeIncremental]]
+    * merges into. */
+  final case class Computed(cube: DataFrame) {
+    /** single row: global totals (reference Totals struct,
+      * totals.go:17-27); all zeros over an empty cube */
+    lazy val totals: DataFrame = rollup()
+    /** one row per uid */
+    lazy val perUser: DataFrame = rollup("uid")
+    /** one row per gid */
+    lazy val perGroup: DataFrame = rollup("gid")
+    /** one row per prefix (input to rankings; reference computes these
+      * per-prefix folds as heap inputs, report_stats.go:231-245) */
+    lazy val perPrefix: DataFrame = rollup("prefix")
+    /** one row per (uid, prefix) — feeds the per-user report file
+      * trees (reference PerIDStats, report_stats.go:34-39, consumed
+      * by writeReportFiles, reports.go:128-229) */
+    lazy val perUserPrefix: DataFrame = rollup("uid", "prefix")
+    /** one row per (gid, prefix) */
+    lazy val perGroupPrefix: DataFrame = rollup("gid", "prefix")
+
+    private def rollup(keys: String*): DataFrame = {
+      val sums = metricNames.map(m => zsum(col(m)).as(m))
+      cube.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+    }
+  }
+
+  private val cubeKey: Seq[String] = Seq("prefix", "uid", "gid")
 
   // sum() over zero rows is NULL in SQL; the reference's zero-value
   // Totals struct means empty must aggregate to 0 (totals.go:17-27).
@@ -74,7 +93,11 @@ object Stats {
   private val signedAggCols: Seq[Column] =
     aggSpecs.map { case (n, e) => zsum(e * col("sign")).as(n) }
 
-  /** Compute all stats frames for one expression over the fact table.
+  /** Compute the stats cube for one expression over the fact table:
+    * one aggregate of the contribution rows on `(prefix, uid, gid)`,
+    * materialized eagerly (`localCheckpoint`) so every rollup and the
+    * artifact write read the small cube instead of re-running the
+    * contribution plan over the snapshot.
     *
     * @param files the FileEntry fact table (see graft.model.FileEntry)
     * @param prefixMatch predicate applied to directory rows (the
@@ -90,22 +113,11 @@ object Stats {
       prefixMatch: Column = lit(true),
       entryMatch: Column = lit(true),
       calc: Calculator = Calculator.Identity,
-      countHardlinkDupsAsFiles: Boolean = false): Computed = {
-    val contrib = contribOf(files, prefixMatch, entryMatch, calc,
-      countHardlinkDupsAsFiles, onlyPrefixes = None)
-    Computed(
-      totals = contrib.agg(aggCols.head, aggCols.tail: _*),
-      perUser = contrib.groupBy(col("uid")).agg(aggCols.head, aggCols.tail: _*),
-      perGroup = contrib.groupBy(col("gid")).agg(aggCols.head, aggCols.tail: _*),
-      perPrefix = contrib.groupBy(col("agg_prefix").as("prefix"))
-        .agg(aggCols.head, aggCols.tail: _*),
-      perUserPrefix = contrib
-        .groupBy(col("uid"), col("agg_prefix").as("prefix"))
-        .agg(aggCols.head, aggCols.tail: _*),
-      perGroupPrefix = contrib
-        .groupBy(col("gid"), col("agg_prefix").as("prefix"))
-        .agg(aggCols.head, aggCols.tail: _*))
-  }
+      countHardlinkDupsAsFiles: Boolean = false): Computed =
+    Computed(contribOf(files, prefixMatch, entryMatch, calc,
+        countHardlinkDupsAsFiles, onlyPrefixes = None)
+      .groupBy(cubeKey.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+      .localCheckpoint(true))
 
   /** The per-contribution-row frame every stats aggregate sums over.
     * `onlyPrefixes` (a one-column `prefix` frame) restricts matched
@@ -157,7 +169,7 @@ object Stats {
         Seq("path"), "left_semi")
       case None => prefixDirs
     }).withColumn("is_prefix_row", lit(true))
-      .withColumn("agg_prefix", col("path"))
+      .withColumn("prefix", col("path"))
 
     // Entry rows: any row whose parent is a matched prefix and which
     // itself passes entryMatch (dirs count as sub_prefixes).
@@ -165,11 +177,11 @@ object Stats {
       .where(entryMatch)
       .join(matchedPrefixes, col("parent") === col("prefix_path"), "left_semi")
       .withColumn("is_prefix_row", lit(false))
-      .withColumn("agg_prefix", col("parent"))
+      .withColumn("prefix", col("parent"))
 
     prefixRows.unionByName(entryRows)
       .withColumn("storage", calc(col("size"), col("blocks")))
-      .select(col("agg_prefix"), col("uid"), col("gid"), col("is_prefix_row"),
+      .select(col("prefix"), col("uid"), col("gid"), col("is_prefix_row"),
         col("is_dir"), col("is_canonical"), col("size"), col("storage"))
   }
 
@@ -193,13 +205,16 @@ object Stats {
 
   /** Incremental `stats compute` (reference contract analyze.go:
     * 226-243 applied to the STATS layer, SURVEY.md §2.8): merge the
-    * previous artifact's six frames with recomputed contributions for
-    * the CHANGED prefixes only — the base table's unchanged prefixes
-    * are never re-aggregated. Every metric is a conditional SUM
-    * ([[aggSpecs]]), so the merge is exact:
-    * `new_state = prev_state − contrib_old(changed) + contrib_new(changed)`,
-    * one ±1-signed aggregate per keying plus a full-outer merge join
-    * (using-columns coalesce the keys).
+    * previous cube with recomputed contributions for the CHANGED
+    * prefixes only — the base table's unchanged prefixes are never
+    * re-aggregated. Every metric is a conditional SUM ([[aggSpecs]]),
+    * so the merge is exact:
+    * `new_cube = prev_cube − contrib_old(changed) + contrib_new(changed)`,
+    * one ±1-signed aggregate on the cube key plus one full-outer merge
+    * join (using-columns coalesce the keys). A key whose contributions
+    * all vanished is dropped: every contribution row adds 1 to exactly
+    * one of `prefixes`, `sub_prefixes`, `files`, `hardlinks`, so their
+    * sum is the key's row count.
     *
     * Hardlink exactness: with `countHardlinkDupsAsFiles = false` the
     * canonical link of a (device, inode) group can FLIP to a link in
@@ -212,9 +227,10 @@ object Stats {
     * Scale shape: one dir-slice full-outer join (changed-set
     * discovery is the caller's if it has walker `reused` flags —
     * [[changedPrefixesOf]] otherwise), two restricted contrib scans
-    * bounded by the changed prefixes' entry rows, six delta
-    * aggregates on those rows alone, six merge joins keyed like the
-    * state. An unchanged-corpus rescan aggregates zero contrib rows. */
+    * bounded by the changed prefixes' entry rows, one delta aggregate
+    * on those rows alone, one merge join with the previous cube. An
+    * unchanged-corpus rescan aggregates zero contrib rows. The result
+    * is NOT materialized: its callers write or read it once. */
   def computeIncremental(
       prev: Computed,
       prevFiles: DataFrame,
@@ -246,48 +262,18 @@ object Stats {
           .select(col("parent").as("prefix"))
         changedPrefixes.unionByName(extra).distinct()
       }).localCheckpoint(true)
-    // the two restricted contribution frames, ±1-signed; computed
-    // once and shared by all six delta aggregates
     val oldC = contribOf(prevFiles, prefixMatch, entryMatch, calc,
       countHardlinkDupsAsFiles, Some(changed)).withColumn("sign", lit(-1L))
     val newC = contribOf(files, prefixMatch, entryMatch, calc,
       countHardlinkDupsAsFiles, Some(changed)).withColumn("sign", lit(1L))
-    val delta = newC.unionByName(oldC).localCheckpoint(true)
-
-    def merge(prevF: DataFrame, keys: Seq[(String, Column)]): DataFrame =
-      if (keys.isEmpty) {
-        // totals: two one-row frames, plain addition
-        val d = delta.agg(signedAggCols.head, signedAggCols.tail: _*)
-          .select(metricNames.map(m => col(m).as(s"__d_$m")): _*)
-        metricNames.foldLeft(prevF.crossJoin(d)) { (df, m) =>
-          df.withColumn(m, col(m) + coalesce(col(s"__d_$m"), lit(0L)))
-        }.select(metricNames.map(col): _*)
-      } else {
-        val d = delta.groupBy(keys.map { case (n, c) => c.as(n) }: _*)
-          .agg(signedAggCols.head, signedAggCols.tail: _*)
-          .select(keys.map(k => col(k._1)) ++
-            metricNames.map(m => col(m).as(s"__d_$m")): _*)
-        val merged = prevF.join(d, keys.map(_._1), "full_outer")
-        metricNames.foldLeft(merged) { (df, m) =>
-          df.withColumn(m,
-            coalesce(col(m), lit(0L)) + coalesce(col(s"__d_$m"), lit(0L)))
-        }.select(keys.map(k => col(k._1)) ++ metricNames.map(col): _*)
-          // a key whose contributions all vanished has zero rows of
-          // every kind — a full recompute would not emit it
-          .where(col("prefixes") + col("sub_prefixes") +
-            col("files") + col("hardlinks") > 0)
-      }
-
-    Computed(
-      totals = merge(prev.totals, Nil),
-      perUser = merge(prev.perUser, Seq("uid" -> col("uid"))),
-      perGroup = merge(prev.perGroup, Seq("gid" -> col("gid"))),
-      perPrefix = merge(prev.perPrefix,
-        Seq("prefix" -> col("agg_prefix"))),
-      perUserPrefix = merge(prev.perUserPrefix,
-        Seq("uid" -> col("uid"), "prefix" -> col("agg_prefix"))),
-      perGroupPrefix = merge(prev.perGroupPrefix,
-        Seq("gid" -> col("gid"), "prefix" -> col("agg_prefix"))))
+    val delta = newC.unionByName(oldC)
+      .groupBy(cubeKey.map(col): _*).agg(signedAggCols.head, signedAggCols.tail: _*)
+      .select(cubeKey.map(col) ++ metricNames.map(m => col(m).as(s"__d_$m")): _*)
+    Computed(prev.cube.join(delta, cubeKey, "full_outer")
+      .select(cubeKey.map(col) ++ metricNames.map(m =>
+        (coalesce(col(m), lit(0L)) + coalesce(col(s"__d_$m"), lit(0L))).as(m)): _*)
+      .where(col("prefixes") + col("sub_prefixes") +
+        col("files") + col("hardlinks") > 0))
   }
 
   /** K1/K2: top-N prefixes by one metric (reference heap.MinMax

@@ -4,36 +4,38 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Persisted stats artifact (reference `.idustats` gob files +
   * `latest` symlink, stats.go:31-82): each `stats compute` writes a
-  * timestamped directory of four parquet tables plus a metadata JSON,
-  * and flips a LATEST pointer. `stats view` / `reports generate` read
-  * the artifact without recomputing — same compute-once/view-many
-  * contract as the reference, in an object-store-safe layout.
+  * timestamped directory holding ONE parquet table — the
+  * `(prefix, uid, gid)` cube of [[Stats.Computed]] — plus a metadata
+  * JSON, and flips a LATEST pointer. `stats view` / `reports generate`
+  * read the artifact without recomputing the snapshot — same
+  * compute-once/view-many contract as the reference, in an
+  * object-store-safe layout.
+  *
+  * Trade-off: views roll the cube up at read time — one aggregate per
+  * collected view, over a table no larger than a per-(id, prefix)
+  * table — in place of reading six pre-aggregated tables. In return an
+  * artifact is one table to write, one schema to read, and the exact
+  * state [[Stats.computeIncremental]] merges into.
   */
 object StatsArtifact {
 
   private val tsFmt = DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss.SSS")
     .withZone(ZoneOffset.UTC)
 
-  final case class Meta(prefix: String, expression: String, date: String)
+  private val json = new ObjectMapper()
 
   def write(base: String, computed: Stats.Computed, prefix: String,
       expression: String): String = {
     val name = tsFmt.format(Instant.now())
     val dir = s"$base/stats/$name"
-    computed.totals.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/totals")
-    computed.perUser.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_user")
-    computed.perGroup.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_group")
-    computed.perPrefix.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_prefix")
-    computed.perUserPrefix.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_user_prefix")
-    computed.perGroupPrefix.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/per_group_prefix")
-    def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    Files.createDirectories(Paths.get(base, "stats"))
-    Files.writeString(Paths.get(dir, "meta.json"),
-      s"""{"prefix": ${j(prefix)}, "expression": ${j(expression)}, "date": ${j(name)}}""")
+    computed.cube.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/cube")
+    json.writeValue(Paths.get(dir, "meta.json").toFile, json.createObjectNode()
+      .put("prefix", prefix).put("expression", expression).put("date", name))
     Files.write(Paths.get(base, "stats", "LATEST"), name.getBytes("UTF-8"),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     name
@@ -59,26 +61,9 @@ object StatsArtifact {
     val n = name.orElse(latestName(base)).getOrElse(
       throw new IllegalStateException(s"no stats artifact under $base"))
     val dir = s"$base/stats/$n"
-    val perUser = spark.read.parquet(s"$dir/per_user")
-    val perGroup = spark.read.parquet(s"$dir/per_group")
-    // Artifacts written before the per-(id, prefix) frames existed
-    // lack these tables; degrade to empty frames with the right
-    // schema instead of failing every view/report on an old database.
-    def perIdPrefixOrEmpty(path: String, perId: org.apache.spark.sql.DataFrame,
-        idCol: String): org.apache.spark.sql.DataFrame =
-      if (Files.exists(Paths.get(path))) spark.read.parquet(path)
-      else {
-        import org.apache.spark.sql.functions.{col, lit}
-        val rest = perId.columns.filterNot(_ == idCol)
-        perId.limit(0).withColumn("prefix", lit(""))
-          .select((Seq(idCol, "prefix") ++ rest).map(col): _*)
-      }
-    Stats.Computed(
-      totals = spark.read.parquet(s"$dir/totals"),
-      perUser = perUser,
-      perGroup = perGroup,
-      perPrefix = spark.read.parquet(s"$dir/per_prefix"),
-      perUserPrefix = perIdPrefixOrEmpty(s"$dir/per_user_prefix", perUser, "uid"),
-      perGroupPrefix = perIdPrefixOrEmpty(s"$dir/per_group_prefix", perGroup, "gid"))
+    require(Files.exists(Paths.get(dir, "cube")),
+      s"stats artifact $dir has no cube table (written by an older " +
+        "version); re-run `stats compute`")
+    Stats.Computed(spark.read.parquet(s"$dir/cube"))
   }
 }

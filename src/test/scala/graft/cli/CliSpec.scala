@@ -187,6 +187,32 @@ class CliSpec extends SparkSpec {
     assert(idx.contains("[staff](by_group/50-staff.md)"))
   }
 
+  test("report tree: ids with equal bytes rank by id, at the n boundary too") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    def entry(path: String, isDir: Boolean, size: Long, uid: Long) =
+      graft.model.FileEntry(path, if (isDir) "" else "/r", path.split("/").last,
+        1, isDir, size, (size + 511) / 512, if (isDir) 0x4000 else 0x8000,
+        new Timestamp(1700000000000L), uid, 50L, 1L,
+        scala.util.hashing.MurmurHash3.stringHash(path).toLong, 1L, 0L)
+    val files = Seq(
+      entry("/r", isDir = true, 0, 0),
+      entry("/r/b.dat", isDir = false, 500, 1001),
+      entry("/r/a.dat", isDir = false, 500, 1000)).toDF()
+    val c = Stats.compute(files)
+    def uidsOf(dir: java.nio.file.Path): Seq[String] =
+      Files.readString(dir.resolve("by_user.tsv")).split("\n").toSeq.tail
+        .map(_.split("\t")(1))
+    val all = Files.createTempDirectory("graft-report-ties")
+    Main.writeReportTree(c, all, n = 10, ids = IdMaps.empty)
+    assert(uidsOf(all) == Seq("1000", "1001", "0"))
+    val one = Files.createTempDirectory("graft-report-ties")
+    Main.writeReportTree(c, one, n = 1, ids = IdMaps.empty)
+    assert(uidsOf(one) == Seq("1000"))
+    assert(Files.exists(one.resolve("by_user/1000-1000.md")))
+    assert(!Files.exists(one.resolve("by_user/1001-1001.md")))
+  }
+
   test("reports locate: newest-first JSON with file lists and ext filter") {
     val base = Files.createTempDirectory("graft-locate")
     def mk(name: String, files: Seq[String]): Unit = {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.expr.FileOperands
 import graft.ids.IdMaps
-import graft.ingest.{ResumableWalk, Snapshot, Walker}
+import graft.ingest.{Incremental, ResumableWalk, Snapshot, Walker}
 import graft.reports.Reports
 import graft.stats.{Calculator, Stats, StatsArtifact}
 
@@ -202,20 +202,11 @@ object Main {
     require_(o.db.nonEmpty, "analyze: no --db and no config match")
     val spark = session()
     val t0 = System.currentTimeMillis()
-    val prevSnapshot =
-      if (o.incremental) Snapshot.latestName(o.db).map(_ =>
-        Snapshot.readFiles(spark, o.db))
-      else None
-    val nameOpt = prevSnapshot match {
-      case Some(prev) =>
-        val r = graft.ingest.Incremental.rescan(spark, root, prev, o.excludes)
-        println(s"incremental: ${r.summary}")
-        val errs = { import spark.implicits._; Seq.empty[graft.model.ScanError].toDF() }
-        Some(Snapshot.write(o.db, r.entries, errs))
-      case None =>
-        firstScan(spark, o.db, root, o.excludes, o.batchSize,
-          o.maxBatches.getOrElse(Int.MaxValue))
-    }
+    val nameOpt =
+      if (o.incremental && Snapshot.latestName(o.db).nonEmpty)
+        Some(rescan(spark, o.db, root, o.excludes))
+      else firstScan(spark, o.db, root, o.excludes, o.batchSize,
+        o.maxBatches.getOrElse(Int.MaxValue))
     val name = nameOpt.getOrElse { spark.stop(); return }
     // One aggregation pass over the fresh snapshot for the summary
     // line (files/dirs/bytes as conditional sums) WITH the in-flight
@@ -524,6 +515,15 @@ object Main {
       ResumableWalk.clear(frontier)
       Some(written)
     }
+  }
+
+  /** Incremental path of `analyze`: re-scan against the LATEST
+    * snapshot and write the merged snapshot with the walk's errors. */
+  private[cli] def rescan(spark: SparkSession, db: String, root: String,
+      excludes: Seq[String]): String = {
+    val r = Incremental.rescan(spark, root, Snapshot.readFiles(spark, db), excludes)
+    println(s"incremental: ${r.summary}")
+    Snapshot.write(db, r.entries, r.errors.toDF())
   }
 
   private def find(args: List[String]): Unit = {

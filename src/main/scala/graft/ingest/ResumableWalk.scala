@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-import graft.ingest.Walker.{ProgressHooks, PrevDirs, Record}
+import graft.ingest.Walker.{ProgressHooks, PrevDirs, Record, SeedSlice}
 
 /** Interrupt-and-resume for a FIRST scan (reference analyze.go:82-87,
   * README:110-114: an interrupted analyze restarts where it left off).
@@ -86,8 +86,8 @@ object ResumableWalk {
     var ran = 0
     batches.indices.foreach { i =>
       if (!committed(i) && ran < maxBatches) {
-        Walker.walkSeeds(spark, batches(i), exclusions, par,
-          progress = progress)
+        Walker.walkSeeds(batches(i).map(SeedSlice(_, None)).toDS(),
+          exclusions, par, progress)
           .write.mode("overwrite").parquet(batchDir(i).toString)
         ran += 1
       }

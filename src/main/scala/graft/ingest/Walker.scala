@@ -154,61 +154,42 @@ object Walker {
       parallelism: Int = 0,
       prevDirs: Option[org.apache.spark.sql.DataFrame] = None,
       progress: Option[ProgressHooks] = None): Result = {
-    import org.apache.spark.sql.functions.{array_join, col, collect_list, regexp_replace, size => asize, slice => aslice, split, struct}
+    import org.apache.spark.sql.functions.{array_join, col, collect_list, concat, lit, regexp_replace, size => asize, slice => aslice, split, struct}
     import spark.implicits._
     val par = if (parallelism > 0) parallelism else spark.sparkContext.defaultParallelism
     val rootPath = Paths.get(root).toAbsolutePath.normalize
-    val exPatterns = exclusions // keep as strings: Regex is not serializable-stable
     // Number of path components in a seed path ("/a/b" has 2).
     val seedComponents = rootPath.getNameCount + seedDepth
+    val comps = split(regexp_replace(col("path"), "^/", ""), "/")
 
     // The driver's shallow prev index: only dirs at component depth
     // ≤ seedComponents (the levels the driver itself walks plus the
     // seed level) — a bounded collect, NOT the whole tree.
-    val driverPrev = prevDirs match {
-      case Some(df) =>
-        val comps = split(regexp_replace(col("path"), "^/", ""), "/")
-        PrevDirs.fromRows(df.where(asize(comps) <= seedComponents)
-          .as[DirMeta].collect().toSeq)
-      case None => PrevDirs.empty
-    }
+    val driverPrev = prevDirs.fold(PrevDirs.empty)(df =>
+      PrevDirs.fromRows(df.where(asize(comps) <= seedComponents)
+        .as[DirMeta].collect().toSeq))
 
     // Driver-side seeding: levels [0, seedDepth) are walked here; dirs
     // at seedDepth become executor work units.
     val (driverRecords, seeds) =
-      driverSeed(rootPath, exPatterns, seedDepth, driverPrev, progress)
+      driverSeed(rootPath, exclusions, seedDepth, driverPrev, progress)
 
-    val nParts = math.max(1, math.min(par, math.max(1, seeds.size)))
-    val walked = prevDirs match {
+    // Key every prev dir by its seed-ancestor path (its first
+    // seedComponents components) and group into per-seed slices: one
+    // shuffle of dir METADATA, partitioned exactly like the walk work
+    // itself. A seed's slice holds its own row plus all dirs beneath it.
+    val slices = prevDirs match {
       case Some(df) =>
-        // Key every prev dir by its seed-ancestor path (its first
-        // seedComponents components) and group into per-seed slices:
-        // one shuffle of dir METADATA, partitioned exactly like the
-        // walk work itself. A seed's slice holds its own row plus all
-        // dirs beneath it.
-        val comps = split(regexp_replace(col("path"), "^/", ""), "/")
-        val slices = df.where(asize(comps) >= seedComponents)
+        val bySeed = df.where(asize(comps) >= seedComponents)
           .withColumn("seed",
-            org.apache.spark.sql.functions.concat(
-              org.apache.spark.sql.functions.lit("/"),
-              array_join(aslice(comps, 1, seedComponents), "/")))
+            concat(lit("/"), array_join(aslice(comps, 1, seedComponents), "/")))
           .groupBy(col("seed"))
           .agg(collect_list(struct(col("path"), col("parent"), col("mt_ms"),
             col("mode"), col("n_entries"))).as("dirs"))
-        seeds.toDF("seed")
-          .join(slices, Seq("seed"), "left")
-          .as[SeedSlice]
-          .repartition(nParts)
-          .mapPartitions { it =>
-            val ex = exPatterns.map(_.r)
-            it.flatMap { s =>
-              val local = PrevDirs.fromRows(s.dirs.getOrElse(Nil))
-              walkSubtree(Paths.get(s.seed), ex, local, progress)
-            }
-          }
-      case None =>
-        walkSeeds(spark, seeds, exPatterns, nParts, progress)
+        seeds.toDF("seed").join(bySeed, Seq("seed"), "left").as[SeedSlice]
+      case None => seeds.map(SeedSlice(_, None)).toDS()
     }
+    val walked = walkSeeds(slices, exclusions, math.min(par, seeds.size), progress)
     Result(walked.union(spark.createDataset(driverRecords)))
   }
 
@@ -233,17 +214,22 @@ object Walker {
     (driverRecords.toSeq, seeds.toSeq)
   }
 
-  /** Distributed walk of an explicit seed list (no prev-snapshot
-    * slices). The unit [[ResumableWalk]] batches over. */
-  private[ingest] def walkSeeds(spark: SparkSession, seeds: Seq[String],
+  /** Distributed walk of a seed list: each seed is walked against its
+    * own slice of the previous snapshot's dirs (`None` on a first
+    * scan). The one executor-side walk, shared by [[walk]] and the
+    * per-batch unit [[ResumableWalk]] runs. */
+  private[ingest] def walkSeeds(seeds: Dataset[SeedSlice],
       exclusions: Seq[String], nParts: Int,
       progress: Option[ProgressHooks] = None): Dataset[Record] = {
+    val spark = seeds.sparkSession
     import spark.implicits._
-    spark.createDataset(seeds)
-      .repartition(math.max(1, nParts))
+    seeds.repartition(math.max(1, nParts))
       .mapPartitions { it =>
         val ex = exclusions.map(_.r)
-        it.flatMap(dir => walkSubtree(Paths.get(dir), ex, PrevDirs.empty, progress))
+        it.flatMap { s =>
+          walkSubtree(Paths.get(s.seed), ex,
+            PrevDirs.fromRows(s.dirs.getOrElse(Nil)), progress)
+        }
       }
   }
 

@@ -36,8 +36,9 @@ object PageRank {
     // NO size-derived coalesce here, deliberately (r13): PageRank's
     // contrib sums are DOUBLES, so changing the edge frame's
     // partition boundaries changes the floating-point summation
-    // order — HitsVariantProbe's parity gate caught the ranks
-    // diverging in the low-order bits the moment a coalesce landed,
+    // order — the r13 probe's parity gate (BENCH_NOTES_r13.md
+    // §"Loop-shape A/Bs") caught the ranks diverging in the low-order
+    // bits the moment a coalesce landed,
     // and the declared q_pagerank must replay bit-stably against its
     // oracle run-to-run. The integer-grid loops (Hits, KCore,
     // LabelProp, the Bfs frames) take the coalesce safely; the ×100
@@ -66,7 +67,7 @@ object PageRank {
                                 // iteration was pure overhead (no
                                 // exchange reuse at stake: r's only
                                 // consumer is the next broadcast).
-                                // HitsVariantProbe ×100: median 14.8
+                                // ×100 A/B (OPTIMIZATION_r13.md): median 14.8
                                 // vs 18.5 s, better in 3 of 4 reps.
     }
     r

@@ -457,9 +457,9 @@ object Analytics {
     // one pair aggregate; the year-over-year compare is a full-outer
     // join of two edge sets (8-byte keyed), nothing quadratic.
     "q_graph_churn" -> ((s, dir) => {
-      // r13, measured and KEPT OUT (tools/ChurnProbe, sf0.1, 4
-      // alternating same-JVM reps): the per-(yr, order) collect_set +
-      // map-side pair emission (the copurchaseEdges rewrite) measured
+      // r13, measured and KEPT OUT (BENCH_NOTES_r13.md §"q_graph_churn
+      // rewrite KEPT OUT", sf0.1, 4 alternating same-JVM reps): the
+      // per-(yr, order) collect_set + map-side pair emission (the copurchaseEdges rewrite) measured
       // 2.6-2.8 s vs 1.8-2.6 s for THIS self-join build. Unlike
       // copurchase (which filters w >= 2 and feeds loops), churn keeps
       // ALL 1.2M distinct pairs: the interpreted pair-lambda emits the

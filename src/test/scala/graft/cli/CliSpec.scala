@@ -278,6 +278,36 @@ class CliSpec extends SparkSpec {
       "resumed snapshot diverged from the one-shot snapshot")
   }
 
+  test("analyze --incremental: rescan writes a new snapshot equal to a first scan") {
+    import graft.ingest.Snapshot
+    val root = Files.createTempDirectory("graft-rescan-tree")
+    for (d <- 0 until 3; s <- 0 until 2) {
+      val p = root.resolve(s"d$d/s$s")
+      Files.createDirectories(p)
+      Files.write(p.resolve(s"f_${d}_$s.txt"), ("x" * (10 + d + s)).getBytes)
+    }
+    val db = Files.createTempDirectory("graft-rescan-db").toString
+    val first = Main.firstScan(spark, db, root.toString, Nil)
+    assert(first.nonEmpty)
+
+    // add a file, delete a subdir
+    Files.write(root.resolve("d0/new.txt"), "fresh".getBytes)
+    val gone = root.resolve("d1/s1")
+    Files.delete(gone.resolve("f_1_1.txt"))
+    Files.delete(gone)
+
+    val name = Main.rescan(spark, db, root.toString, Nil)
+    assert(Snapshot.latestName(db).contains(name) && !first.contains(name))
+    val fresh = Files.createTempDirectory("graft-rescan-oneshot").toString
+    assert(Main.firstScan(spark, fresh, root.toString, Nil).nonEmpty)
+    def rows(db: String): Seq[String] =
+      Snapshot.readFiles(spark, db)
+        .select(col("path"), col("size"), col("is_dir"))
+        .collect().map(_.toString).toSeq.sorted
+    assert(rows(db) == rows(fresh), "rescan snapshot diverged from a first scan")
+    assert(Snapshot.readErrors(spark, db).count() == 0)
+  }
+
   test("analyze summary and export emit in-flight quality metrics") {
     import graft.ingest.Snapshot
     val root = Files.createTempDirectory("graft-quality-tree")

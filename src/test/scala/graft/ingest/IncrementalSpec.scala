@@ -120,6 +120,37 @@ class IncrementalSpec extends SparkSpec {
     assert(paths(res.entries) == paths(fullWalk(root)))
   }
 
+  test("type change at one path: file -> dir and dir -> file") {
+    val root = buildTree()
+    val prev = snapshotNow(root)
+    import scala.jdk.CollectionConverters._
+    // a file replaced by a dir of the same name (with one file in it)
+    val f = root.resolve("d0-0/f1-0")
+    Files.delete(f)
+    Files.createDirectory(f)
+    Files.write(f.resolve("inner"), "i".getBytes)
+    // a dir with three files replaced by a file of the same name
+    val d = root.resolve("d0-1/d1-0")
+    Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    Files.write(d, "now a file".getBytes)
+
+    val res = Incremental.rescan(spark, root.toString, prev, seedDepth = 1)
+    val s = res.summary
+    // root, d0-0/d1-0, d0-0/d1-1, d0-1/d1-1 keep their mtimes
+    assert(s.prefixes_unchanged == 4)
+    assert(s.prefixes_changed == 2) // d0-0, d0-1
+    assert(s.prefixes_added == 1) // d0-0/f1-0, a file before
+    assert(s.prefixes_deleted == 1) // d0-1/d1-0, a file now
+    // d0-0: f1-1, f1-2; d0-1: f1-0..2 + d1-0; d0-0/f1-0: inner
+    assert(s.files_rescanned == 7)
+    assert(s.files_reused == 4 * 3)
+    // d0-0/f1-0 (a dir now) and the three files under d0-1/d1-0
+    assert(s.files_deleted == 4)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("path", "is_dir", "size", "n_entries").collect().map(_.toString).toSet
+    assert(rows(res.entries) == rows(fullWalk(root)))
+  }
+
   test("mode change invalidates reuse") {
     val root = buildTree()
     val prev = snapshotNow(root)

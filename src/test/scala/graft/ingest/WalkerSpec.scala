@@ -68,6 +68,14 @@ class WalkerSpec extends SparkSpec {
     try {
       val res = Walker.walk(spark, root.toString, seedDepth = 2)
       assert(res.errors.collect().exists(_.path == locked.toString))
+      // an incremental rescan carries the walk's errors too; the
+      // locked dir has no row to reuse, so touch its parent to have
+      // it listed again
+      val prev = res.entries.toDF().cache()
+      prev.count()
+      Files.write(root.resolve("f-touch"), "t".getBytes)
+      val inc = Incremental.rescan(spark, root.toString, prev, seedDepth = 2)
+      assert(inc.errors.collect().exists(_.path == locked.toString))
     } finally {
       Files.setPosixFilePermissions(locked, PosixFilePermissions.fromString("rwxrwxrwx"))
     }
